@@ -393,7 +393,9 @@ def agg_decimal_exact_pricing(spark, sf_dir):
     "q3_shipping_priority",
     """
     SELECT o_orderkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+           round(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+                     * (1 - CAST(l_discount AS DECIMAL(13,2)))), 2)::DOUBLE
+               AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -432,11 +434,18 @@ def _q3_compose(li, o, c, preagg: bool = False):
     distribution on o_orderkey satisfies clustering by any superset
     key). On the plain layout the same rewrite was measured WORSE at
     sf10 (r11: the pre-agg forces the full li⋈o exchange anyway and
-    adds a pass), which is why it is arm-gated rather than default."""
+    adds a pass), which is why it is arm-gated rather than default.
+
+    Revenue sums as DECIMAL(18,2) and casts to DOUBLE after rounding
+    (the agg_decimal_exact_pricing pattern): a DOUBLE sum's order-
+    dependent last bits flipped round(, 2) between runs on the same
+    data, and the decimal sum is exact in any order and either arm."""
     c = c.filter(F.col("c_mktsegment") == "BUILDING")
     o = o.filter(F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     li = li.filter(F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp"))
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    rev = F.col("l_extendedprice").cast("decimal(18,2)") * (
+        1 - F.col("l_discount").cast("decimal(13,2)")
+    )
     if preagg:
         per_order = (
             li.join(o, li.l_orderkey == o.o_orderkey)
@@ -446,7 +455,7 @@ def _q3_compose(li, o, c, preagg: bool = False):
         return (
             per_order.join(c, per_order.o_custkey == c.c_custkey)
             .groupBy("o_orderkey")
-            .agg(F.round(F.sum("_rev"), 2).alias("revenue"))
+            .agg(F.round(F.sum("_rev"), 2).cast("double").alias("revenue"))
             .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
             .limit(10)
         )
@@ -454,7 +463,7 @@ def _q3_compose(li, o, c, preagg: bool = False):
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
         .groupBy("o_orderkey")
-        .agg(F.round(F.sum(rev), 2).alias("revenue"))
+        .agg(F.round(F.sum(rev), 2).cast("double").alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
         .limit(10)
     )
@@ -588,7 +597,9 @@ def _bucketed_fact(spark, sf_dir, table: str, key: str, n_buckets: int = _BKT_FA
     "q3_bucketed_layout",
     """
     SELECT o_orderkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+           round(sum(CAST(l_extendedprice AS DECIMAL(18,2))
+                     * (1 - CAST(l_discount AS DECIMAL(13,2)))), 2)::DOUBLE
+               AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey

@@ -453,31 +453,6 @@ def main() -> None:
         "n_query_ratios_gt2.5": sum(1 for r in ratios0.values() if r > 2.5),
         "detail": "BENCH_DETAIL.json",
     }
-    # Reference the clean-start window artifact (VERDICT r14 "What's
-    # wrong" #2): the ≤2× bar is judged on first-hour fresh-process
-    # windows (tools/windows.py --out WINDOWS_r*.json, cold window 0
-    # discarded), NOT on this single live run, whose ratio moves ±30%
-    # with host state. Point at the newest artifact so a reader of the
-    # bench JSON finds the bar evidence in the same medium.
-    try:
-        import glob as _glob
-
-        wins = sorted(
-            _glob.glob(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "WINDOWS_r*.json",
-                )
-            )
-        )
-        if wins:
-            newest = max(wins, key=os.path.getmtime)
-            with open(newest) as _f:
-                wrec = json.load(_f)
-            out["windows_artifact"] = os.path.basename(newest)
-            out["windows_ratios"] = wrec.get("summary", {}).get("ratios")
-    except Exception:
-        pass
     # Full per-query detail (both engines, both scales) goes to a
     # sidecar file, NOT the final stdout line: the driver captures only
     # the last 2000 chars of stdout and parses the final JSON line from

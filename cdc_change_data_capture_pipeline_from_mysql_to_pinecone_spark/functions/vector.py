@@ -97,18 +97,26 @@ def cosine_sim_precomputed_norms(a: Column, b: Column, na: Column, nb: Column) -
 
 
 def _stack(v):
-    """pandas Series of float arrays -> (float64 matrix, null mask)."""
+    """pandas Series of float arrays -> (float64 matrix, null mask).
+
+    NULL and EMPTY vectors become zero rows, so they take the kernels'
+    zero-norm branch (score 0.0; NULLs are re-masked by the caller).
+    Uniform-dim batches keep the one-call fast path."""
     import numpy as np
 
     mask = v.isna().to_numpy()
-    if mask.any():
-        dim = len(v[~mask].iloc[0]) if (~mask).any() else 0
-        rows = [
-            (np.zeros(dim, dtype=np.float64) if m else np.asarray(x, dtype=np.float64))
-            for m, x in zip(mask, v.to_numpy())
-        ]
-        return (np.vstack(rows) if rows else np.empty((0, dim))), mask
-    return np.vstack(v.to_numpy()).astype(np.float64, copy=False), mask
+    vals = v.to_numpy()
+    if not mask.any():
+        try:
+            return np.vstack(vals).astype(np.float64, copy=False), mask
+        except ValueError:
+            pass  # empty vectors among non-empty ones
+    dim = max((len(x) for m, x in zip(mask, vals) if not m), default=0)
+    rows = [
+        (np.zeros(dim, dtype=np.float64) if m or len(x) == 0 else np.asarray(x, dtype=np.float64))
+        for m, x in zip(mask, vals)
+    ]
+    return (np.vstack(rows) if rows else np.empty((0, dim))), mask
 
 
 def _masked_series(values, mask):

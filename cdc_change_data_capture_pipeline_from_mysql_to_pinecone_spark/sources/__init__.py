@@ -1,5 +1,7 @@
 from .sinks import (
+    commit_watermark,
     compact_parquet,
+    read_watermarks,
     recover_table,
     upsert_parquet,
     upsert_parquet_partitioned,
@@ -25,6 +27,8 @@ __all__ = [
     "jdbc_reader_options",
     "upsert_parquet",
     "upsert_parquet_partitioned",
+    "read_watermarks",
+    "commit_watermark",
     "read_bucketed",
     "write_bucketed",
     "load_fact",

@@ -6,9 +6,12 @@ index (service_layer/service.py:151-166) and its watermark table via
 transactional table format in this environment, MERGE is expressed as
 read + union + last-writer-wins max_by aggregate + atomic directory
 swap —
-correct for the engine's keyed tables (watermark, vectors), and the
-``foreachBatch`` body a Structured Streaming sink uses for
-exactly-once effect given deterministic ids (SURVEY §4 "exactly-once").
+correct for the engine's keyed tables, and the ``foreachBatch`` body a
+Structured Streaming sink uses for exactly-once effect given
+deterministic ids (SURVEY §4 "exactly-once"). The sweep's one-row-per-
+table watermark table is the exception: the driver merges and writes
+it itself (:func:`read_watermarks` / :func:`commit_watermark`), with
+the same swap.
 
 At 100 TB the same call sites would target Delta/Iceberg MERGE — the
 operator contract (keyed last-writer-wins) is format-independent.
@@ -33,7 +36,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ._commit import atomic_write_file, restore_or_clean, swap_in
+from ._commit import _fsync_dir, atomic_write_file, restore_or_clean, swap_in
 
 
 def upsert_parquet(
@@ -69,13 +72,118 @@ _swap_in = swap_in
 _restore_or_clean = restore_or_clean
 
 
+# -- the sweep's watermark table, read and committed on the driver ------------
+#
+# One row per tracked table (table_name, last_updated, batch_rows,
+# version) — the reference's INSERT ... ON DUPLICATE KEY UPDATE row
+# (service.py:35-46). A handful of rows does not need Spark: through
+# upsert_parquet it cost five jobs per sweep tick (read: schema
+# inference + collect; commit: read, union, max_by shuffle, write), a
+# third of the tick. Like Structured Streaming's offset and commit
+# logs, the driver writes it itself. Spark still reads it as
+# ``table_name string, last_updated timestamp, batch_rows long,
+# version long``, and it is swapped in by the same rename-aside
+# protocol, so recover_table repairs it like any keyed table.
+
+
+def _read_watermark_rows(path: str) -> dict[str, tuple[int, int, int]]:
+    """``{table_name: (last_updated_us, batch_rows, version)}`` of the
+    committed table, timestamps as Spark-internal epoch micros. Reads
+    tables written by either path: Spark's default INT96 (pyarrow sees
+    timestamp[ns]) or TIMESTAMP_MICROS."""
+    if not os.path.isdir(path):
+        return {}
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    # the dataset skips _- and .-prefixed files (_SUCCESS, .crc), as
+    # Spark's listing does
+    tbl = ds.dataset(path, format="parquet").to_table(
+        columns=["table_name", "last_updated", "batch_rows", "version"]
+    )
+    ts = tbl["last_updated"]
+    us = ts.cast(pa.timestamp("us", tz=ts.type.tz)).cast(pa.int64()).to_pylist()
+    return {
+        name: (u, n, v)
+        for name, u, n, v in zip(
+            tbl["table_name"].to_pylist(),
+            us,
+            tbl["batch_rows"].to_pylist(),
+            tbl["version"].to_pylist(),
+        )
+    }
+
+
+def read_watermarks(path: str) -> dict[str, dict]:
+    """The committed watermark table at ``path`` as ``{table_name:
+    {"last_updated", "batch_rows", "version"}}``, read with pyarrow on
+    the driver — no Spark job. ``last_updated`` is the datetime a Spark
+    ``collect()`` of the table returns (``TimestampType.fromInternal``),
+    so it is the exact literal the next ``incremental_scan`` compares
+    against. A missing table reads as ``{}``."""
+    from pyspark.sql.types import TimestampType
+
+    to_dt = TimestampType().fromInternal
+    return {
+        name: {"last_updated": to_dt(us), "batch_rows": n, "version": v}
+        for name, (us, n, v) in _read_watermark_rows(path).items()
+    }
+
+
+def commit_watermark(path: str, table: str, last_updated, batch_rows: int) -> None:
+    """Commit ``table``'s new watermark into the table at ``path`` on
+    the driver — no Spark job. Last-writer-wins on ``version`` =
+    ``unix_micros(last_updated)``, as ``upsert_parquet`` did: a row
+    older than the committed one leaves the table untouched; ties go to
+    the new row. ``date`` values widen to midnight timestamps (the
+    table's column is a timestamp for every tracked table).
+
+    The merged table is written as one fsync'd parquet file into
+    ``{path}.tmp-<uuid>`` and swapped in with :func:`._commit.swap_in`,
+    so a crash at any point leaves the previous commit recoverable by
+    :func:`recover_table`. Callers serialize concurrent commits (the
+    sweep holds its store lock), as for every merge in this module."""
+    import datetime as _dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import TimestampType
+
+    if isinstance(last_updated, _dt.date) and not isinstance(last_updated, _dt.datetime):
+        last_updated = _dt.datetime(last_updated.year, last_updated.month, last_updated.day)
+    version = TimestampType().toInternal(last_updated)
+    rows = _read_watermark_rows(path)
+    if table in rows and rows[table][2] > version:
+        return
+    rows[table] = (version, int(batch_rows), version)
+    names = sorted(rows)
+    data = pa.table(
+        {
+            "table_name": pa.array(names, pa.string()),
+            "last_updated": pa.array(
+                [rows[n][0] for n in names], pa.timestamp("us", tz="UTC")
+            ),
+            "batch_rows": pa.array([rows[n][1] for n in names], pa.int64()),
+            "version": pa.array([rows[n][2] for n in names], pa.int64()),
+        }
+    )
+    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+    os.makedirs(tmp)
+    with open(os.path.join(tmp, "part-00000.parquet"), "wb") as fh:
+        pq.write_table(data, fh)
+        fh.flush()
+        os.fsync(fh.fileno())
+    _fsync_dir(tmp)
+    swap_in(path, tmp)
+
+
 def recover_table(path: str) -> str:
     """Repair a keyed table after a crash mid-swap. ``_swap_in`` has
     one non-atomic window: after the live dir is renamed aside and
     before the new dir is renamed in. A crash there leaves the target
     missing with an ``_old-{name}-*`` aside holding the previous
-    committed state. Handles both whole-table swaps (upsert_parquet)
-    and per-partition swaps inside a bucketed table
+    committed state. Handles both whole-table swaps (upsert_parquet,
+    commit_watermark) and per-partition swaps inside a bucketed table
     (upsert_parquet_partitioned). Returns the strongest action taken:
     'ok' (nothing to do), 'cleaned' (stale aside/tmp removed),
     'restored' (a committed state promoted back).

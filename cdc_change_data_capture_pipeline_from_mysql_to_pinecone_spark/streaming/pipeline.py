@@ -146,12 +146,18 @@ def sweep(
     {table: rows_processed}.
 
     ``tables`` maps table name -> (change_col, order_col). State lives
-    under ``store_dir``: a keyed ``watermark`` table and a keyed
-    ``vectors`` table, both maintained with last-writer-wins MERGE
-    (sources.sinks.upsert_parquet). Deterministic chunk ids make the
-    whole sweep replay-idempotent — crash after vector upsert but
-    before watermark commit reprocesses the delta into identical sink
-    rows (the reference would duplicate, SURVEY §2.9 T3).
+    under ``store_dir``: a hash-bucketed ``vectors`` table maintained
+    with a last-writer-wins MERGE (sources.sinks.
+    upsert_parquet_partitioned; ``values`` included when
+    ``with_embeddings``), and a one-row-per-table ``watermark`` table
+    that the driver reads and commits itself (sources.sinks.
+    read_watermarks / commit_watermark — no Spark job, same parquet
+    format and rename-aside swap). Per table the order is: vector
+    upsert, THEN watermark commit. Deterministic chunk ids make the
+    whole sweep replay-idempotent — a crash after the vector upsert
+    but before the watermark commit reprocesses the delta into
+    identical sink rows (the reference would duplicate, SURVEY §2.9
+    T3).
 
     ``max_parallel_tables`` > 1 processes tables concurrently (the
     reference loops serially, controller.py:25-27): each table's
@@ -171,7 +177,12 @@ def sweep(
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
-    from ..sources.sinks import recover_table, upsert_parquet, upsert_parquet_partitioned
+    from ..sources.sinks import (
+        commit_watermark,
+        read_watermarks,
+        recover_table,
+        upsert_parquet_partitioned,
+    )
     from ..sources.tables import load_table
 
     wm_path = os.path.join(store_dir, "watermark")
@@ -180,17 +191,7 @@ def sweep(
     # their committed state before reading watermarks (idempotent)
     recover_table(wm_path)
     recover_table(vec_path)
-    # Collect watermarks eagerly: the commits below replace the
-    # watermark directory, so a lazily-read wm_df would capture a file
-    # listing that points at deleted part files (FAILED_READ_FILE on
-    # the second delta-bearing table).
-    if os.path.exists(wm_path):
-        wm = {
-            r["table_name"]: r["last_updated"]
-            for r in spark.read.parquet(wm_path).select("table_name", "last_updated").collect()
-        }
-    else:
-        wm = {}
+    wm = {t: r["last_updated"] for t, r in read_watermarks(wm_path).items()}
     processed: dict[str, int] = {}
     store_lock = threading.Lock()
 
@@ -226,6 +227,7 @@ def sweep(
 
         vec_updates = sink_rows.select(
             "id",
+            *(["values"] if with_embeddings else []),
             F.col("metadata.text").alias("text"),
             F.lit(table).alias("source"),
             F.unix_micros(F.lit(wm_row["last_updated"])).alias("version"),
@@ -246,8 +248,8 @@ def sweep(
             with store_lock:
                 # vectors grow with the corpus: hash-bucketed layout so
                 # each micro-batch rewrites only the buckets it touches
-                # (O(batch), not O(table); the plain upsert stays for
-                # the tiny watermark)
+                # (O(batch), not O(table)); the tiny watermark commits
+                # on the driver
                 upsert_parquet_partitioned(
                     spark,
                     vec_path,
@@ -260,11 +262,9 @@ def sweep(
                         else {}
                     ),
                 )
-                wm_update = spark.createDataFrame(
-                    [(table, wm_row["last_updated"], wm_row["batch_rows"])],
-                    "table_name string, last_updated timestamp, batch_rows long",
-                ).withColumn("version", F.unix_micros("last_updated"))
-                upsert_parquet(spark, wm_path, wm_update, ["table_name"], "version")
+                commit_watermark(
+                    wm_path, table, wm_row["last_updated"], wm_row["batch_rows"]
+                )
         finally:
             vec_updates.unpersist()
         return table, wm_row["batch_rows"]
@@ -304,7 +304,8 @@ def run_multi_table_streaming(
 
     Every micro-batch runs the same ``cdc_tick`` DAG the batch ``sweep``
     uses and commits into the same keyed store (hash-bucketed
-    ``vectors``, last-writer-wins ``watermark``), so batch and
+    ``vectors``, driver-committed last-writer-wins ``watermark``,
+    sources.sinks.commit_watermark), so batch and
     streaming modes are interchangeable over one store. Store commits
     serialize under a lock (read-modify-write of shared directories);
     everything upstream of the commit is independent per table.
@@ -316,7 +317,7 @@ def run_multi_table_streaming(
     import os
     import threading
 
-    from ..sources.sinks import recover_table, upsert_parquet, upsert_parquet_partitioned
+    from ..sources.sinks import commit_watermark, recover_table, upsert_parquet_partitioned
     from ..sources.tables import _nanos_ts_columns
 
     wm_path = os.path.join(store_dir, "watermark")
@@ -352,6 +353,7 @@ def run_multi_table_streaming(
                 lu = _dt.datetime(lu.year, lu.month, lu.day)
             vec_updates = sink_rows.select(
                 "id",
+                *(["values"] if with_embeddings else []),
                 F.col("metadata.text").alias("text"),
                 F.lit(table).alias("source"),
                 F.unix_micros(F.lit(lu)).alias("version"),
@@ -366,11 +368,7 @@ def run_multi_table_streaming(
                     upsert_parquet_partitioned(
                         spark, vec_path, vec_updates, ["id"], "version"
                     )
-                    wm_update = spark.createDataFrame(
-                        [(table, lu, wm_row["batch_rows"])],
-                        "table_name string, last_updated timestamp, batch_rows long",
-                    ).withColumn("version", F.unix_micros("last_updated"))
-                    upsert_parquet(spark, wm_path, wm_update, ["table_name"], "version")
+                    commit_watermark(wm_path, table, lu, wm_row["batch_rows"])
             finally:
                 vec_updates.unpersist()
 

@@ -559,3 +559,222 @@ def test_upsert_schema_evolution_new_column(spark, tmp_path):
     delete_keys(spark, path, spark.createDataFrame([(5,)], ["id"]), ["id"])
     t3 = read_keyed_table(spark, path)
     assert "lang" in t3.columns and t3.count() == 39
+
+
+# -- the sweep's driver-side watermark table --------------------------------
+
+
+def _old_watermark_upsert(spark, path, table, last_updated, batch_rows):
+    """The Spark path the sweep committed its watermark through before
+    the driver-side commit: a one-row frame MERGEd by upsert_parquet
+    (date values widened to midnight, as the streaming sink did)."""
+    import datetime
+
+    if isinstance(last_updated, datetime.date) and not isinstance(
+        last_updated, datetime.datetime
+    ):
+        last_updated = datetime.datetime(
+            last_updated.year, last_updated.month, last_updated.day
+        )
+    update = spark.createDataFrame(
+        [(table, last_updated, batch_rows)],
+        "table_name string, last_updated timestamp, batch_rows long",
+    ).withColumn("version", F.unix_micros("last_updated"))
+    upsert_parquet(spark, path, update, ["table_name"], "version")
+
+
+def test_watermark_helpers_run_no_spark_jobs(spark, tmp_path):
+    import datetime
+
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
+        commit_watermark,
+        read_watermarks,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    path = str(tmp_path / "watermark")
+    sc.setJobGroup("watermark-probe", "driver-side watermark helpers")
+    try:
+        before = set(tracker.getJobIdsForGroup("watermark-probe"))
+        commit_watermark(path, "events", datetime.datetime(2024, 1, 10, 5, 6, 7, 8), 12)
+        commit_watermark(path, "orders", datetime.date(2024, 1, 5), 3)
+        got = read_watermarks(path)
+        after = set(tracker.getJobIdsForGroup("watermark-probe"))
+        # the probe does see a job run in the group
+        spark.range(3).collect()
+        control = set(tracker.getJobIdsForGroup("watermark-probe"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert after == before
+    assert control != after
+    assert got["events"]["last_updated"] == datetime.datetime(2024, 1, 10, 5, 6, 7, 8)
+    assert got["orders"]["last_updated"] == datetime.datetime(2024, 1, 5)
+    assert (got["events"]["batch_rows"], got["orders"]["batch_rows"]) == (12, 3)
+
+
+def test_commit_watermark_matches_spark_upsert(spark, sf_dir, tmp_path):
+    """Spark reads the driver-written table as exactly the rows (and
+    column types) the old upsert_parquet commit wrote, for a timestamp
+    change column and a date one; read_watermarks returns what a Spark
+    collect() of either table returns."""
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.operators.cdc import (
+        next_watermark,
+    )
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
+        load_table,
+    )
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
+        commit_watermark,
+        read_watermarks,
+    )
+
+    old_path, new_path = str(tmp_path / "old"), str(tmp_path / "new")
+    events = load_table(spark, sf_dir, "events")
+    orders = load_table(spark, sf_dir, "orders").withColumn(
+        "o_orderdate", F.to_date("o_orderdate")
+    )
+    for table, df, col in [("events", events, "ts"), ("orders", orders, "o_orderdate")]:
+        wm = next_watermark(df, col).collect()[0]
+        _old_watermark_upsert(spark, old_path, table, wm["last_updated"], wm["batch_rows"])
+        commit_watermark(new_path, table, wm["last_updated"], wm["batch_rows"])
+
+    old = spark.read.parquet(old_path)
+    new = spark.read.parquet(new_path)
+    assert new.dtypes == old.dtypes
+    assert sorted(new.collect()) == sorted(old.collect())
+    collected = {r["table_name"]: r["last_updated"] for r in old.collect()}
+    for path in (old_path, new_path):
+        got = read_watermarks(path)
+        assert {t: r["last_updated"] for t, r in got.items()} == collected
+
+
+def test_commit_watermark_older_version_keeps_committed(spark, tmp_path):
+    import datetime
+
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
+        commit_watermark,
+        read_watermarks,
+    )
+
+    path = str(tmp_path / "watermark")
+    t1, t2, t3 = (datetime.datetime(2024, 1, d) for d in (1, 2, 3))
+    commit_watermark(path, "events", t2, 5)
+    commit_watermark(path, "orders", t1, 7)
+    commit_watermark(path, "events", t1, 9)  # older: no effect
+    got = read_watermarks(path)
+    assert got["events"]["last_updated"] == t2 and got["events"]["batch_rows"] == 5
+    assert got["orders"]["last_updated"] == t1
+    commit_watermark(path, "events", t3, 4)
+    got = read_watermarks(path)
+    assert got["events"]["last_updated"] == t3 and got["events"]["batch_rows"] == 4
+    assert got["orders"]["last_updated"] == t1
+    assert got["events"]["version"] == int(t3.timestamp() * 1_000_000)
+
+
+def _write_events(src, rows):
+    import pandas as pd
+
+    os.makedirs(src, exist_ok=True)
+    pdf = pd.DataFrame(rows, columns=["event_id", "ts", "value"])
+    pdf["ts"] = pdf["ts"].astype("datetime64[us]")
+    pdf.to_parquet(os.path.join(src, "events.parquet"), index=False)
+
+
+def test_watermark_commit_crash_recovers_and_replays(spark, tmp_path, monkeypatch):
+    """A crash inside the driver-side watermark commit — after the tmp
+    write but before the swap, or after the live table was renamed
+    aside — recovers to the previous commit, and the next sweep then
+    reproduces the store of a run without a crash."""
+    import datetime
+
+    import pytest
+
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources import (
+        recover_table,
+        sinks,
+    )
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.streaming.pipeline import (
+        sweep,
+    )
+
+    day1, day2 = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 2, 1)
+    rows1 = [(i, day1, float(i)) for i in range(80)]
+    rows2 = rows1 + [(1000 + i, day2 + datetime.timedelta(seconds=i), 0.0) for i in range(30)]
+    src1, src2 = str(tmp_path / "src1"), str(tmp_path / "src2")
+    _write_events(src1, rows1)
+    _write_events(src2, rows2)
+    tables = {"events": ("ts", "event_id")}
+
+    def state(store):
+        vecs = sorted(
+            tuple(r) for r in spark.read.parquet(os.path.join(store, "vectors")).collect()
+        )
+        wm = sorted(tuple(r) for r in spark.read.parquet(os.path.join(store, "watermark")).collect())
+        return vecs, wm
+
+    ref = str(tmp_path / "ref")
+    sweep(spark, src1, ref, tables, chunk_size=10)
+    assert sweep(spark, src2, ref, tables, chunk_size=10) == {"events": 30}
+    expected = state(ref)
+
+    def crash_before_swap(path, tmp):
+        raise RuntimeError("crash before swap")
+
+    def crash_after_aside(path, tmp):
+        os.rename(path, os.path.join(os.path.dirname(path), "_old-watermark-deadbeef"))
+        raise RuntimeError("crash after rename-aside")
+
+    for crash, status in [(crash_before_swap, "cleaned"), (crash_after_aside, "restored")]:
+        store = str(tmp_path / crash.__name__)
+        wm_path = os.path.join(store, "watermark")
+        sweep(spark, src1, store, tables, chunk_size=10)
+        committed = sinks.read_watermarks(wm_path)
+        monkeypatch.setattr(sinks, "swap_in", crash)
+        with pytest.raises(RuntimeError, match="crash"):
+            sweep(spark, src2, store, tables, chunk_size=10)
+        monkeypatch.undo()
+        assert recover_table(wm_path) == status
+        assert sinks.read_watermarks(wm_path) == committed
+        assert not [d for d in os.listdir(store) if d.startswith(("watermark.tmp-", "_old-"))]
+        # the vectors were upserted before the crash; the replay is a no-op on them
+        assert sweep(spark, src2, store, tables, chunk_size=10) == {"events": 30}
+        assert state(store) == expected
+
+
+def test_commit_watermark_parallel_commits_under_lock_keep_every_table(tmp_path):
+    """The sweep's parallel tables commit under one store lock; no
+    table's row may be lost to another's read-modify-write."""
+    import datetime
+    import threading
+
+    from cdc_change_data_capture_pipeline_from_mysql_to_pinecone_spark.sources.sinks import (
+        commit_watermark,
+        read_watermarks,
+    )
+
+    path = str(tmp_path / "watermark")
+    lock = threading.Lock()
+    tables = [f"t{i}" for i in range(12)]
+    base = datetime.datetime(2024, 1, 1)
+
+    def worker(table):
+        for day in range(1, 6):
+            with lock:
+                commit_watermark(path, table, base + datetime.timedelta(days=day), day)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(t,)) for t in tables]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+    finally:
+        sys.setswitchinterval(old)
+    got = read_watermarks(path)
+    assert sorted(got) == sorted(tables)
+    assert {r["batch_rows"] for r in got.values()} == {5}
+    assert {r["last_updated"] for r in got.values()} == {base + datetime.timedelta(days=5)}
